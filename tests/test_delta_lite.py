@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from thrive_spark.sources.delta_lite import DeltaLiteTable
+from thrive_spark.sources.fileset import write_files
 
 
 def test_fold_add_remove_and_time_travel(spark, tmp_path):
@@ -475,6 +476,16 @@ def test_dv_protocol_guards(spark, tmp_path):
         tbl.snapshot()
 
 
+def _adds(root, df, part_col):
+    """Delta add actions for ``df`` written partitioned by ``part_col``
+    under ``root`` through the shared file-set writer."""
+    return [
+        {"path": e.relpath, "size": e.size, "modificationTime": 0,
+         "dataChange": True, "partitionValues": e.partition}
+        for e in write_files(df, root, [part_col])
+    ]
+
+
 def test_dv_with_partition_columns(spark, tmp_path):
     """DVs compose with log-resident partition values: the anti-join
     applies inside each partition-literal group."""
@@ -484,14 +495,8 @@ def test_dv_with_partition_columns(spark, tmp_path):
         [(i, "a" if i < 5 else "b", float(i)) for i in range(10)],
         "k bigint, g string, p double",
     )
-    # build a partitioned delta table via the writer's create
-    parts = []
-    for g in ("a", "b"):
-        sub = df.filter(f"g = '{g}'").drop("g")
-        adds = tbl._write_files(sub, f"g={g}")
-        for a in adds:
-            a["partitionValues"] = {"g": g}
-        parts += adds
+    # build a partitioned delta table from the shared file-set writer
+    parts = _adds(root, df, "g")
     tbl._commit(0, [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {"metaData": {
@@ -522,12 +527,7 @@ def test_purge_dvs_rewrites_and_drops_descriptors(spark, tmp_path):
         [(i, "a" if i < 5 else "b", float(i)) for i in range(10)],
         "k bigint, g string, p double",
     )
-    parts = []
-    for g in ("a", "b"):
-        adds = tbl._write_files(df.filter(f"g = '{g}'").drop("g"), f"g={g}")
-        for a in adds:
-            a["partitionValues"] = {"g": g}
-        parts += adds
+    parts = _adds(root, df, "g")
     tbl._commit(0, [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {"metaData": {

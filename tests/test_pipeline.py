@@ -88,6 +88,19 @@ def test_pipeline_incremental_and_rollback(spark, sf_dir, tmp_path):
     assert len(parts) >= 25
 
 
+def test_pipeline_run_leaves_session_conf_unchanged(spark, sf_dir, tmp_path):
+    """Dynamic partition overwrite is a per-write option: a run with an
+    overwrite_partitions sink must not leak it into the shared session,
+    where every later overwrite would inherit it."""
+    root, out = str(tmp_path), str(tmp_path / "out")
+    os.makedirs(f"{root}/in")
+    _write_json_dir(spark, sf_dir, f"{root}/in/d1", 1, 3)
+    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    before = spark.conf.getAll
+    assert len(Pipeline(make_spec(root, out), spark).run()) == 1
+    assert spark.conf.getAll == before
+
+
 def test_pipeline_from_yaml(spark, sf_dir, tmp_path):
     """The reference's config-file surface: same spec via YAML."""
     import yaml

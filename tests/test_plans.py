@@ -424,6 +424,36 @@ def test_ohlc_single_aggregate_no_window(spark, sf_dir, qdf):
     assert plan.count("+- Exchange") == 1  # one shuffle, on the bar key
 
 
+def test_basket_brand_affinity_single_lineage(spark, sf_dir, qdf):
+    """The window rewrite keeps ONE lineage: a single lineitem scan,
+    no RDD barrier (a localCheckpoint plans as Scan ExistingRDD), and
+    at most 6 exchanges (5 shuffles plus the dim broadcast)."""
+    plan = physical_plan(qdf("basket_brand_affinity"))
+    tree = plan.split("\n\n")[0]
+    assert "ExistingRDD" not in plan, tree
+    assert plan.count("lineitem.parquet") == 1, tree
+    assert tree.count("Exchange") <= 6, tree
+
+
+def test_physical_plan_same_after_execution(spark, sf_dir):
+    """Once AQE has executed a frame, physical_plan keeps only its
+    Initial plan, so the gates above do not depend on whether the
+    oracle sweep ran the session-shared frame first."""
+    import re
+
+    df = QUERIES["win_running_sum_reset"](spark, sf_dir)
+    fresh = physical_plan(df)
+    df.collect()
+    ran = physical_plan(df)
+
+    def blocks(plan):
+        plan = re.sub(r"\(\d+\)|#\d+L?|plan_id=\d+|isFinalPlan=\w+", "", plan)
+        return sorted(b.strip() for b in plan.split("\n\n") if b.strip())
+
+    assert "Final Plan" not in ran
+    assert blocks(ran) == blocks(fresh)
+
+
 def test_incremental_bucketed_probe_shuffle_free(spark, sf_dir):
     """The persisted-LSH-index exhibit: the (band, key) probe join must
     be a bucket-aligned SMJ with no Exchange on either side — the

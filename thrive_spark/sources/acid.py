@@ -26,7 +26,7 @@ The commit protocol is the whole ACID story:
   deletes recompute their copy-on-write rewrite so a concurrent
   append's rows are never silently resurrected or lost.
 - DELETE is copy-on-write at FILE grain: only files that actually
-  contain matching rows (found via input_file_name()) are rewritten
+  contain matching rows (found by one scan grouped by file) are rewritten
   without the victims; untouched files are carried into the new
   manifest by reference — the storage/merge cost scales with churn,
   not table size, and consecutive snapshots share unchanged files
@@ -61,12 +61,18 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
 from ..operators._util import dsum, osum
 from ..registry import query
+from .fileset import (
+    footer_stats,
+    per_file_partials,
+    positions,
+    remove_unreferenced,
+    write_files,
+)
 
 
 class CommitConflict(Exception):
@@ -88,6 +94,21 @@ def _evict_seg_cache_under(root: str) -> None:
         path = k[0] if isinstance(k, tuple) else k
         if path.startswith(root.rstrip(os.sep) + os.sep):
             _SEG_CACHE.pop(k, None)
+
+
+def _zone_map(footer) -> dict:
+    """Per-column [min, max] of one file from its parquet FOOTER —
+    no data read. Stored in the manifest at commit time (Delta's
+    per-file stats role), so a pruned scan plans from metadata alone.
+    Manifests are JSON: only plain scalars are kept (timestamps,
+    bytes and decimals are skipped, so those columns are simply never
+    pruned)."""
+    ok = (int, float, str, bool)
+    return {
+        c: [st.min, st.max]
+        for c, st in footer_stats(footer).items()
+        if isinstance(st.min, ok) and isinstance(st.max, ok)
+    }
 
 
 class ThriveTable:
@@ -231,56 +252,20 @@ class ThriveTable:
 
     # -- write path --
 
-    def _write_files(self, df) -> list[str]:
-        token = uuid.uuid4().hex[:12]
-        out = os.path.join(self.root, "data", token)
-        df.write.parquet(out)
-        return sorted(
-            os.path.join(out, f)
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
+    def _write(self, df, partition_cols=()) -> tuple[list[str], int, dict]:
+        """Write ``df`` as new data files under a fresh writer token:
+        (absolute paths, row count, per-file zone maps), all from the
+        parquet footers — no extra Spark job."""
+        out = os.path.join(self.root, "data", uuid.uuid4().hex[:12])
+        entries = write_files(df, out, partition_cols)
+        paths = [os.path.join(out, e.relpath) for e in entries]
+        return (
+            paths,
+            sum(e.num_rows for e in entries),
+            {p: _zone_map(e.footer) for p, e in zip(paths, entries)},
         )
 
     # -- zone maps / data skipping (r12) --
-
-    @staticmethod
-    def _file_stats(files: list[str]) -> dict:
-        """Per-file column zone maps (min/max) harvested from parquet
-        FOOTERS via pyarrow — no data read. Stored in the manifest at
-        commit time (Delta's per-file stats role), so a pruned scan
-        plans from metadata alone. Only scalar-typed columns with
-        footer statistics appear; a file/column without stats is
-        simply never pruned."""
-        import pyarrow.parquet as pq
-
-        out: dict = {}
-        for path in files:
-            md = pq.ParquetFile(path).metadata
-            mins: dict = {}
-            maxs: dict = {}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    name = col.path_in_schema
-                    lo, hi = st.min, st.max
-                    # manifests are JSON: keep only plain scalars
-                    # (timestamps/bytes/decimals are skipped, so those
-                    # columns are simply never pruned)
-                    ok = (int, float, str, bool)
-                    if not (isinstance(lo, ok) and isinstance(hi, ok)):
-                        continue
-                    if name not in mins or lo < mins[name]:
-                        mins[name] = lo
-                    if name not in maxs or hi > maxs[name]:
-                        maxs[name] = hi
-            out[path] = {
-                k: [mins[k], maxs[k]] for k in mins if k in maxs
-            }
-        return out
 
     def file_stats(self, m: dict) -> dict:
         """Zone maps for every file of a manifest (loose + segments)."""
@@ -348,21 +333,17 @@ class ThriveTable:
             os.unlink(tmp)
 
     def create(self, df) -> int:
-        files = self._write_files(df)
-        n = self.snapshot_of(files).count()
+        files, n, stats = self._write(df)
         self._try_commit(
             1,
             {
                 "op": "create",
                 "n_rows": n,
                 "schema": df.schema.json(),
-                **self._pack([], files, self._file_stats(files)),
+                **self._pack([], files, stats),
             },
         )
         return 1
-
-    def snapshot_of(self, files: list[str]):
-        return self.spark.read.parquet(*files)
 
     def _merged_schema(self, base_schema_json: str, df) -> str:
         """Schema evolution (Delta mergeSchema role): new columns
@@ -417,8 +398,7 @@ class ThriveTable:
         version's own schema. Type changes are rejected."""
         if txn is not None and (v := self.txn_version(*txn)) is not None:
             return v  # replay of a committed transaction: no-op
-        new_files = self._write_files(df)
-        n_new = self.snapshot_of(new_files).count()
+        new_files, n_new, new_stats = self._write(df)
         for _ in range(max_retries):
             base = self.latest_version()
             m = self.manifest(base)
@@ -443,10 +423,7 @@ class ThriveTable:
                         **self._pack(
                             m.get("segments", []),
                             m.get("files", []) + new_files,
-                            {
-                                **m.get("stats", {}),
-                                **self._file_stats(new_files),
-                            },
+                            {**m.get("stats", {}), **new_stats},
                         ),
                         **(
                             {"txn": [txn[0], int(txn[1])]}
@@ -484,34 +461,15 @@ class ThriveTable:
         for _ in range(max_retries):
             base = self.latest_version()
             m = self.manifest(base)
-            files = self.files(m)
-            tagged = self._read_under(m, files).withColumn(
-                "_file", F.input_file_name()
+            affected, n_surv = self._hits(
+                m, lambda scan: scan, F.count_if(F.expr(pred_sql))
             )
-            affected_uris = [
-                r[0]
-                for r in tagged.filter(pred_sql)
-                .select("_file")
-                .distinct()
-                .collect()
-            ]
-            affected = {urlparse(u).path for u in affected_uris}
-            survivors = [f for f in files if f not in affected]
-            new_files: list[str] = []
-            n_kept = 0
+            new_files, n_kept, new_stats = [], 0, {}
             if affected:
-                kept = (
+                new_files, n_kept, new_stats = self._write(
                     self._read_under(m, sorted(affected))
                     .filter(f"NOT coalesce(({pred_sql}), false)")
                 )
-                n_kept = kept.count()
-                if n_kept:
-                    new_files = self._write_files(kept)
-            n_surv = (
-                self._read_under(m, survivors).count()
-                if survivors
-                else 0
-            )
             try:
                 self._try_commit(
                     base + 1,
@@ -519,7 +477,7 @@ class ThriveTable:
                         "op": "delete",
                         "n_rows": n_surv + n_kept,
                         "schema": m["schema"],
-                        **self._cow_pack(m, affected, new_files),
+                        **self._cow_pack(m, affected, new_files, new_stats),
                     },
                 )
                 return base + 1
@@ -527,7 +485,30 @@ class ThriveTable:
                 continue  # rebase: recompute COW against new latest
         raise CommitConflict("delete retries exhausted")
 
-    def _cow_pack(self, m: dict, affected: set, new_files: list) -> dict:
+    def _hits(self, m: dict, probe, hit) -> tuple[set, int]:
+        """The copy-on-write victim search, ONE grouped scan of the
+        manifest's files: (files where ``hit`` counts a row of
+        ``probe(scan)``, row count of all other files)."""
+        files = self.files(m)
+        if not files:
+            return set(), 0
+        parts = per_file_partials(
+            probe(positions(self._read_under(m, files))),
+            self.root,
+            hit.alias("hit"),
+        )
+        affected, n_other = set(), 0
+        for f in files:
+            r = parts.get(os.path.relpath(f, self.root))
+            if r is not None and r["hit"]:
+                affected.add(f)
+            elif r is not None:
+                n_other += r["n"]
+        return affected, n_other
+
+    def _cow_pack(
+        self, m: dict, affected: set, new_files: list, new_stats: dict
+    ) -> dict:
         """Manifest fragment for a copy-on-write commit: segments with
         no victims ride by reference; victim segments dissolve (their
         survivors rejoin the loose tail, CARRYING their zone maps) —
@@ -553,7 +534,7 @@ class ThriveTable:
                 if f in base_stats:
                     stats[f] = base_stats[f]
         loose.extend(new_files)
-        stats.update(self._file_stats(new_files))
+        stats.update(new_stats)
         return self._pack(segs, loose, stats)
 
     def merge_upsert(self, source, key: str, max_retries: int = 10) -> int:
@@ -565,45 +546,33 @@ class ThriveTable:
         The source is written once as fresh files (updates + inserts
         together) and reused across conflict rebases.
 
-        Scale shape: the match probe is a broadcast-able semi join on
-        the key against input_file_name-tagged scans — cost scales
-        with the source and the VICTIM files, not the table."""
-        src_files = self._write_files(source)
-        src = self.snapshot_of(src_files)
-        n_src = src.count()
-        keys = src.select(key).distinct()
+        Scale shape: the match probe is a broadcast-able join on the
+        key against the file-tagged scan — cost scales with the
+        source and the VICTIM files, not the table."""
+        src_files, n_src, src_stats = self._write(source)
+        keys = (
+            self.spark.read.schema(source.schema).parquet(*src_files)
+            if src_files
+            else self.spark.createDataFrame([], source.schema)
+        ).select(key).distinct()
+        marked = keys.withColumn("__m", F.lit(1))
         for _ in range(max_retries):
             base = self.latest_version()
             m = self.manifest(base)
-            files = self.files(m)
-            tagged = self._read_under(m, files).withColumn(
-                "_file", F.input_file_name()
+            affected, n_surv = self._hits(
+                m,
+                lambda scan: scan.join(
+                    F.broadcast(marked), on=key, how="left"
+                ),
+                F.count("__m"),
             )
-            affected_uris = [
-                r[0]
-                for r in tagged.join(
-                    F.broadcast(keys), on=key, how="left_semi"
-                )
-                .select("_file")
-                .distinct()
-                .collect()
-            ]
-            affected = {urlparse(u).path for u in affected_uris}
-            survivors = [f for f in files if f not in affected]
-            new_files: list[str] = []
-            n_kept = 0
+            new_files, n_kept, new_stats = [], 0, {}
             if affected:
-                kept = self._read_under(m, sorted(affected)).join(
-                    F.broadcast(keys), on=key, how="left_anti"
+                new_files, n_kept, new_stats = self._write(
+                    self._read_under(m, sorted(affected)).join(
+                        F.broadcast(keys), on=key, how="left_anti"
+                    )
                 )
-                n_kept = kept.count()
-                if n_kept:
-                    new_files = self._write_files(kept)
-            n_surv = (
-                self._read_under(m, survivors).count()
-                if survivors
-                else 0
-            )
             try:
                 self._try_commit(
                     base + 1,
@@ -612,7 +581,8 @@ class ThriveTable:
                         "n_rows": n_surv + n_kept + n_src,
                         "schema": m["schema"],
                         **self._cow_pack(
-                            m, affected, new_files + src_files
+                            m, affected, new_files + src_files,
+                            {**new_stats, **src_stats},
                         ),
                     },
                 )
@@ -692,8 +662,9 @@ class ThriveTable:
                 return base  # nothing worth packing
             total = sum(os.path.getsize(f) for f in small)
             k = max(1, -(-total // target_file_bytes))
-            df = self._read_under(m, sorted(small)).coalesce(k)
-            new_files = self._write_files(df)
+            new_files, _, new_stats = self._write(
+                self._read_under(m, sorted(small)).coalesce(k)
+            )
             try:
                 self._try_commit(
                     base + 1,
@@ -701,7 +672,9 @@ class ThriveTable:
                         "op": "compact",
                         "n_rows": m["n_rows"],
                         "schema": m["schema"],
-                        **self._cow_pack(m, set(small), new_files),
+                        **self._cow_pack(
+                            m, set(small), new_files, new_stats
+                        ),
                     },
                 )
                 return base + 1
@@ -794,15 +767,7 @@ class ThriveTable:
                 .sortWithinPartitions("_zf", "_z")
                 .drop("_z", *rank_cols)
             )
-            token = uuid.uuid4().hex[:12]
-            out = os.path.join(self.root, "data", token)
-            clustered.write.partitionBy("_zf").parquet(out)
-            new_files = sorted(
-                os.path.join(dirpath, f)
-                for dirpath, _dirs, fs in os.walk(out)
-                for f in fs
-                if f.endswith(".parquet")
-            )
+            new_files, _, new_stats = self._write(clustered, ["_zf"])
             try:
                 self._try_commit(
                     base + 1,
@@ -811,7 +776,9 @@ class ThriveTable:
                         "cluster_by": list(cols),
                         "n_rows": m["n_rows"],
                         "schema": m["schema"],
-                        **self._cow_pack(m, set(files), new_files),
+                        **self._cow_pack(
+                            m, set(files), new_files, new_stats
+                        ),
                     },
                 )
                 return base + 1
@@ -894,24 +861,7 @@ class ThriveTable:
                     n_segs += 1
         data_root = os.path.join(self.root, "data")
         if os.path.isdir(data_root):
-            import shutil
-
-            for token in list(os.listdir(data_root)):
-                tdir = os.path.join(data_root, token)
-                keep_any = False
-                # walk recursively: cluster_by writes partitionBy
-                # subdirs (data/<token>/_zf=N/part-*.parquet)
-                for dirpath, _dirs, fs in os.walk(tdir):
-                    for f in fs:
-                        p = os.path.join(dirpath, f)
-                        if f.endswith(".parquet"):
-                            if p in keep_files:
-                                keep_any = True
-                            else:
-                                os.unlink(p)
-                                n_data += 1
-                if not keep_any:  # no live data: drop markers + dir
-                    shutil.rmtree(tdir)
+            n_data = remove_unreferenced(data_root, keep_files)
         return {
             "dropped_versions": dropped,
             "deleted_data_files": n_data,

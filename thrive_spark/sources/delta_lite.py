@@ -47,6 +47,17 @@ from pyspark.sql import functions as F
 
 from ..operators._util import dsum, osum
 from ..registry import query
+from .fileset import (
+    POS,
+    drop_positions,
+    file_uri,
+    per_file_partials,
+    position_keys,
+    positions,
+    read_footer,
+    remove_unreferenced,
+    write_files,
+)
 
 
 class DeltaLiteTable:
@@ -324,9 +335,7 @@ class DeltaLiteTable:
 
         deleted = []
         for a in dv_adds:
-            uri = "file:" + os.path.abspath(
-                os.path.join(self.root, a["path"])
-            )
+            uri = file_uri(os.path.join(self.root, a["path"]))
             desc = a["deletionVector"]
             rows = read_dv(self.root, desc)
             if len(rows) != int(desc.get("cardinality", len(rows))):
@@ -335,17 +344,9 @@ class DeltaLiteTable:
                     f"{len(rows)} vs {desc.get('cardinality')}"
                 )
             deleted.extend((uri, ri) for ri in rows)
-        df = df.select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-        del_df = self.spark.createDataFrame(
-            deleted, "__fp string, __ri bigint"
-        )
-        return df.join(
-            F.broadcast(del_df), ["__fp", "__ri"], "left_anti"
-        ).drop("__fp", "__ri")
+        return drop_positions(
+            positions(df), position_keys(self.spark, deleted)
+        ).drop(*POS)
 
     # -- minimal spec writer (exhibit/test construction only) --
 
@@ -458,21 +459,9 @@ class DeltaLiteTable:
         ]
         # rewrite per partition tuple so partitionValues survive (data
         # files never hold partition columns)
-        by_pv: dict[tuple, list] = {}
-        for a in dv_adds:
-            pv = tuple(
-                (c, a.get("partitionValues", {}).get(c))
-                for c in part_cols
-            )
-            by_pv.setdefault(pv, []).append(a)
-        for pv, group in sorted(by_pv.items()):
-            kept = self._read_adds(group, data_schema)
-            if not kept.count():
-                continue
-            for a in self._write_files(
-                kept, f"part-{uuid.uuid4().hex[:8]}"
-            ):
-                a["partitionValues"] = dict(pv)
+        for pv, group in _by_partition(dv_adds, part_cols):
+            for a in self._write(self._read_adds(group, data_schema)):
+                a["partitionValues"] = dict(zip(part_cols, pv))
                 actions.append({"add": a})
         vs, cps = self.versions(), self.checkpoints()
         v = max(vs[-1] if vs else -1, cps[-1] if cps else -1) + 1
@@ -497,61 +486,21 @@ class DeltaLiteTable:
         os.link(tmp, os.path.join(self.log, f"{version:020d}.json"))
         os.unlink(tmp)
 
-    def _write_files(self, df, subdir: str) -> list[dict]:
-        out = os.path.join(self.root, subdir)
-        df.write.parquet(out)
+    def _write(self, df, part_cols=()) -> list[dict]:
+        """Write ``df`` as new data files under a fresh ``part-*``
+        directory; returns their ``add`` actions. Partition values come
+        from the hive layout, stringly, per the protocol."""
+        sub = f"part-{uuid.uuid4().hex[:8]}"
         return [
             {
-                "path": f"{subdir}/{f}",
-                "size": os.path.getsize(os.path.join(out, f)),
+                "path": f"{sub}/{e.relpath}",
+                "size": e.size,
                 "modificationTime": 0,
                 "dataChange": True,
-                "partitionValues": {},
+                "partitionValues": e.partition,
             }
-            for f in sorted(os.listdir(out))
-            if f.endswith(".parquet")
+            for e in write_files(df, os.path.join(self.root, sub), part_cols)
         ]
-
-    def _write_files_partitioned(
-        self, df, part_cols: list[str]
-    ) -> list[dict]:
-        """Partition-aware write: one partitionBy job, partition
-        values harvested from the hive layout into the adds'
-        partitionValues (stringly, per the protocol), partition
-        columns dropped from the data files — the real writer's
-        layout."""
-        if not part_cols:
-            return self._write_files(df, f"part-{uuid.uuid4().hex[:8]}")
-        import urllib.parse
-
-        sub = f"part-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.root, sub)
-        df.write.partitionBy(*part_cols).parquet(out)
-        adds: list[dict] = []
-        for dirpath, _dirs, fnames in sorted(os.walk(out)):
-            parts = [f for f in sorted(fnames) if f.endswith(".parquet")]
-            if not parts:
-                continue
-            rel_dir = os.path.relpath(dirpath, out)
-            segs = [] if rel_dir == "." else rel_dir.split(os.sep)
-            pv = {}
-            for seg, c in zip(segs, part_cols):
-                raw = urllib.parse.unquote(seg.split("=", 1)[1])
-                pv[c] = (
-                    None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
-                )
-            for fname in parts:
-                fpath = os.path.join(dirpath, fname)
-                adds.append({
-                    "path": os.path.join(
-                        sub, os.path.relpath(fpath, out)
-                    ),
-                    "size": os.path.getsize(fpath),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                    "partitionValues": pv,
-                })
-        return adds
 
     def create(
         self,
@@ -609,9 +558,7 @@ class DeltaLiteTable:
         adds = (
             _adds
             if _adds is not None
-            else self._write_files_partitioned(
-                write_df, partition_columns or []
-            )
+            else self._write(write_df, partition_columns or [])
         )
         self._commit(
             0,
@@ -639,7 +586,7 @@ class DeltaLiteTable:
             part_cols = self.state()["meta"].get(
                 "partitionColumns", []
             )
-            adds = self._write_files_partitioned(df, part_cols)
+            adds = self._write(df, part_cols)
         self._commit(v, [{"add": a} for a in adds])
         return v
 
@@ -709,7 +656,7 @@ class DeltaLiteTable:
         vs, cps = self.versions(), self.checkpoints()
         v = max(vs[-1] if vs else -1, cps[-1] if cps else -1) + 1
         part_cols = st["meta"].get("partitionColumns", [])
-        adds = self._write_files_partitioned(df, part_cols)
+        adds = self._write(df, part_cols)
         self._commit(
             v,
             [{"txn": {"appId": app_id, "version": int(txn_version)}}]
@@ -894,50 +841,21 @@ class DeltaLiteTable:
             reader = reader.schema(
                 StructType.fromJson(json.loads(st["meta"]["schemaString"]))
             )
-        tagged = reader.parquet(*paths).withColumn(
-            "_f", F.input_file_name()
+        hits = per_file_partials(
+            positions(reader.parquet(*paths)).filter(pred_sql), self.root
         )
-        from urllib.parse import urlparse
-
-        hit_uris = [
-            r[0]
-            for r in tagged.filter(pred_sql).select("_f").distinct().collect()
-        ]
-        hits = {urlparse(u).path for u in hit_uris}
         victims = [
-            a for a in st["adds"]
-            if os.path.join(self.root, a["path"]) in hits
+            a for a in st["adds"] if os.path.normpath(a["path"]) in hits
         ]
         if not victims:
             return st["version"]
-        kept = reader.parquet(*sorted(hits)).filter(
-            f"NOT coalesce(({pred_sql}), false)"
-        )
+        kept = reader.parquet(*[
+            os.path.join(self.root, a["path"]) for a in victims
+        ]).filter(f"NOT coalesce(({pred_sql}), false)")
         actions = [
             {"remove": {"path": a["path"], "dataChange": True}}
             for a in victims
-        ]
-        # write first, count from the parquet footers — one scan of
-        # the hit files instead of two (r16: count() + write cost a
-        # measurable slice of this exhibit's wall)
-        import pyarrow.parquet as _pq
-
-        sub = f"part-{uuid.uuid4().hex[:8]}"
-        adds = self._write_files(kept, sub)
-        n_kept = sum(
-            _pq.ParquetFile(
-                os.path.join(self.root, a["path"])
-            ).metadata.num_rows
-            for a in adds
-        )
-        if n_kept:
-            actions += [{"add": a} for a in adds]
-        else:
-            import shutil
-
-            shutil.rmtree(
-                os.path.join(self.root, sub), ignore_errors=True
-            )
+        ] + [{"add": a} for a in self._write(kept)]
         v = self.versions()[-1] + 1
         self._commit(v, actions)
         return v
@@ -983,19 +901,7 @@ class DeltaLiteTable:
                 keep.add(os.path.normpath(
                     _dv_file_path(self.root, dv["pathOrInlineDv"])
                 ))
-        n = 0
-        for dirpath, _dirs, fnames in os.walk(self.root):
-            if os.path.normpath(dirpath).startswith(
-                os.path.normpath(self.log)
-            ):
-                continue
-            for f in fnames:
-                p = os.path.normpath(os.path.join(dirpath, f))
-                if p in keep or f.startswith("_") or f.startswith("."):
-                    continue
-                os.unlink(p)
-                n += 1
-        return n
+        return remove_unreferenced(self.root, keep | {self.log})
 
     # -- change data feed (spec §Add CDC File, r14) --
 
@@ -1026,51 +932,51 @@ class DeltaLiteTable:
         partitioned table omit the partition columns and carry
         ``partitionValues`` in the action."""
         sub = f"_change_data/cdc-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.root, sub)
-        df.write.parquet(out)
         return [
             {
-                "path": f"{sub}/{f}",
-                "size": os.path.getsize(os.path.join(out, f)),
+                "path": f"{sub}/{e.relpath}",
+                "size": e.size,
                 "dataChange": False,
                 "partitionValues": dict(pv or {}),
             }
-            for f in sorted(os.listdir(out))
-            if f.endswith(".parquet")
+            for e in write_files(df, os.path.join(self.root, sub))
         ]
 
     def _tagged_snapshot(self, st: dict):
-        """Live rows with partition literals re-materialized AND a
-        ``_f`` file-attribution column — the CDF writers' working
-        view (snapshot() loses file identity; raw reads lose the
-        partition columns)."""
-        import json as _json
-
+        """Live rows with partition literals re-materialized AND their
+        file ``positions`` — the CDF writers' working view (snapshot()
+        loses file identity; raw reads lose the partition columns).
+        The log's schema spares the schema-inference job; CDF writers
+        refuse column-mapped tables, so logical names are physical."""
         from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(
-            _json.loads(st["meta"]["schemaString"])
-        )
+        schema = StructType.fromJson(json.loads(st["meta"]["schemaString"]))
         part_cols = st["meta"].get("partitionColumns", [])
         typ = {f.name: f.dataType for f in schema.fields}
-        by_pv: dict[tuple, list] = {}
-        for a in st["adds"]:
-            pv = tuple(
-                a.get("partitionValues", {}).get(c) for c in part_cols
-            )
-            by_pv.setdefault(pv, []).append(a)
+        data_schema = StructType(
+            [f for f in schema.fields if f.name not in part_cols]
+        )
         out = None
-        for pv, adds in sorted(by_pv.items()):
-            df = self.spark.read.parquet(
+        for pv, adds in _by_partition(st["adds"], part_cols):
+            df = positions(self.spark.read.schema(data_schema).parquet(
                 *[os.path.join(self.root, a["path"]) for a in adds]
-            ).withColumn("_f", F.input_file_name())
+            ))
             for c, val in zip(part_cols, pv):
                 df = df.withColumn(c, F.lit(val).cast(typ[c]))
-            df = df.select(
-                *[f.name for f in schema.fields], "_f"
-            )
+            df = df.select(*[f.name for f in schema.fields], *POS)
             out = df if out is None else out.unionByName(df)
         return out
+
+    def _hit_adds(self, st: dict, pred_sql: str) -> list[dict]:
+        """Live adds whose file holds a row matching ``pred_sql`` (the
+        predicate sees partition columns), from ONE grouped scan."""
+        tagged = self._tagged_snapshot(st)
+        if tagged is None:
+            return []
+        hits = per_file_partials(tagged.filter(pred_sql), self.root)
+        return [
+            a for a in st["adds"] if os.path.normpath(a["path"]) in hits
+        ]
 
     def _guard_cdf_writer(self, st: dict) -> None:
         if not self._cdf_enabled(st):
@@ -1097,49 +1003,25 @@ class DeltaLiteTable:
         st = self.state()
         self._guard_cdf_writer(st)
         part_cols = st["meta"].get("partitionColumns", [])
-        tagged = self._tagged_snapshot(st)
-        if tagged is None:
-            return st["version"]
-        from urllib.parse import urlparse
-
-        hits = {
-            urlparse(r[0]).path
-            for r in tagged.filter(pred_sql).select("_f")
-            .distinct().collect()
-        }
-        victims = [
-            a for a in st["adds"]
-            if os.path.join(self.root, a["path"]) in hits
-        ]
+        victims = self._hit_adds(st, pred_sql)
         if not victims:
             return st["version"]
         actions = [
             {"remove": {"path": a["path"], "dataChange": True}}
             for a in victims
         ]
-        by_pv: dict[tuple, list] = {}
-        for a in victims:
-            pv = tuple(
-                a.get("partitionValues", {}).get(c) for c in part_cols
-            )
-            by_pv.setdefault(pv, []).append(a)
-        for pv, adds in sorted(by_pv.items()):
+        for pv, adds in _by_partition(victims, part_cols):
             pv_map = dict(zip(part_cols, pv))
-            group = self._tagged_snapshot(
-                {**st, "adds": adds}
-            ).drop("_f")
+            group = self._tagged_snapshot({**st, "adds": adds}).drop(*POS)
             kept = group.filter(
                 f"NOT coalesce(({pred_sql}), false)"
             ).drop(*part_cols)
             gone = group.filter(
                 f"coalesce(({pred_sql}), false)"
             ).drop(*part_cols)
-            if kept.count():
-                for add in self._write_files(
-                    kept, f"part-{uuid.uuid4().hex[:8]}"
-                ):
-                    add["partitionValues"] = dict(pv_map)
-                    actions.append({"add": add})
+            for add in self._write(kept):
+                add["partitionValues"] = dict(pv_map)
+                actions.append({"add": add})
             actions += [
                 {"cdc": c}
                 for c in self._write_cdc_files(
@@ -1178,37 +1060,16 @@ class DeltaLiteTable:
                 f"updating partition column(s) {sorted(moved)} would "
                 "migrate rows between partitions"
             )
-        tagged = self._tagged_snapshot(st)
-        if tagged is None:
-            return st["version"]
-        from urllib.parse import urlparse
-
-        hits = {
-            urlparse(r[0]).path
-            for r in tagged.filter(pred_sql).select("_f")
-            .distinct().collect()
-        }
-        victims = [
-            a for a in st["adds"]
-            if os.path.join(self.root, a["path"]) in hits
-        ]
+        victims = self._hit_adds(st, pred_sql)
         if not victims:
             return st["version"]
         actions = [
             {"remove": {"path": a["path"], "dataChange": True}}
             for a in victims
         ]
-        by_pv: dict[tuple, list] = {}
-        for a in victims:
-            pv = tuple(
-                a.get("partitionValues", {}).get(c) for c in part_cols
-            )
-            by_pv.setdefault(pv, []).append(a)
-        for pv, adds in sorted(by_pv.items()):
+        for pv, adds in _by_partition(victims, part_cols):
             pv_map = dict(zip(part_cols, pv))
-            group = self._tagged_snapshot(
-                {**st, "adds": adds}
-            ).drop("_f")
+            group = self._tagged_snapshot({**st, "adds": adds}).drop(*POS)
             pre = group.filter(f"coalesce(({pred_sql}), false)")
             post = pre.selectExpr(
                 *[f"({set_map[c]}) AS {c}" if c in set_map else c
@@ -1217,9 +1078,8 @@ class DeltaLiteTable:
             untouched = group.filter(
                 f"NOT coalesce(({pred_sql}), false)"
             )
-            for add in self._write_files(
-                untouched.unionByName(post).drop(*part_cols),
-                f"part-{uuid.uuid4().hex[:8]}",
+            for add in self._write(
+                untouched.unionByName(post).drop(*part_cols)
             ):
                 add["partitionValues"] = dict(pv_map)
                 actions.append({"add": add})
@@ -1304,16 +1164,6 @@ class DeltaLiteTable:
             nonlocal out
             out = d if out is None else out.unionByName(d)
 
-        def by_pv(actions):
-            groups: dict[tuple, list] = {}
-            for a in actions:
-                pv = tuple(
-                    (a.get("partitionValues") or {}).get(c)
-                    for c in part_cols
-                )
-                groups.setdefault(pv, []).append(a)
-            return sorted(groups.items())
-
         for v in range(start, end + 1):
             if v not in vs:
                 raise ValueError(
@@ -1339,7 +1189,7 @@ class DeltaLiteTable:
                     list(data_fields)
                     + [StructField("_change_type", StringType())]
                 )
-                for pv, group in by_pv(cdcs):
+                for pv, group in _by_partition(cdcs, part_cols):
                     df = self.spark.read.schema(cdc_schema).parquet(*[
                         os.path.join(self.root, c["path"])
                         for c in group
@@ -1423,7 +1273,7 @@ class DeltaLiteTable:
                     "exist (vacuumed?) — insert changes cannot be "
                     "derived for this version"
                 )
-            for pv, group in by_pv(adds):
+            for pv, group in _by_partition(adds, part_cols):
                 emit(
                     self.spark.read.schema(data_schema).parquet(*[
                         os.path.join(self.root, a["path"])
@@ -1453,7 +1303,7 @@ class DeltaLiteTable:
                         .get("partitionValues", {})}
                     for r in removes
                 ]
-                for pv, group in by_pv(resolved):
+                for pv, group in _by_partition(resolved, part_cols):
                     emit(
                         self.spark.read.schema(data_schema).parquet(*[
                             os.path.join(self.root, r["path"])
@@ -1475,6 +1325,42 @@ class DeltaLiteTable:
             )
             return self.spark.createDataFrame([], ddl)
         return out
+
+
+def _by_partition(actions: list[dict], part_cols) -> list:
+    """Actions grouped by their partitionValues over ``part_cols``:
+    sorted (value tuple, actions) pairs."""
+    groups: dict[tuple, list] = {}
+    for a in actions:
+        pvs = a.get("partitionValues") or {}
+        groups.setdefault(tuple(pvs.get(c) for c in part_cols), []).append(a)
+    return sorted(groups.items())
+
+
+def _file_sums(spark, root: str, paths, schema, value) -> dict:
+    """``{path: (rows, sum of value)}`` for Delta add paths under
+    ``root`` from ONE grouped scan. A file the scan sees no rows of
+    must hold zero rows by its footer, else the error names it."""
+    parts = per_file_partials(
+        positions(spark.read.schema(schema).parquet(*[
+            os.path.join(root, p) for p in sorted(paths)
+        ])),
+        root,
+        F.sum(value).alias("s"),
+    )
+    out = {}
+    for p in paths:
+        r = parts.get(os.path.normpath(p))
+        if r is not None:
+            out[p] = (r["n"], r["s"])
+        elif read_footer(os.path.join(root, p)).num_rows == 0:
+            out[p] = (0, 0)
+        else:
+            raise ValueError(
+                f"add {p!r} under {root!r} is missing from its per-file "
+                "scan"
+            )
+    return out
 
 
 @query(
@@ -1549,7 +1435,7 @@ def scan_delta_log_table(spark, sf_dir):
         .withColumn("_b", bkt)
         .repartition(6, "_v", "_b")
     )
-    walked = tbl._write_files_partitioned(both, ["_v", "_b"])
+    walked = tbl._write(both, ["_v", "_b"])
     by_ver = {"0": [], "1": []}
     for a in walked:
         by_ver[a["partitionValues"]["_v"]].append(
@@ -1580,8 +1466,6 @@ def scan_delta_log_table(spark, sf_dir):
     # (bounded by file count, not data size; same fixed-point sum as
     # dsum so the result is bit-identical). Replaces 3 snapshot scans
     # + a union + collect (4 jobs) with 1 job. (guide §2.6)
-    from urllib.parse import urlparse
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1593,28 +1477,19 @@ def scan_delta_log_table(spark, sf_dir):
     from ..operators._util import SCALE, fixed
 
     states = {ver: tbl.state(ver) for ver in tbl.versions()}
-    all_paths = sorted(
-        {a["path"] for st in states.values() for a in st["adds"]}
-    )
     schema = StructType.fromJson(
         json.loads(states[0]["meta"]["schemaString"])
     )
-    per_file = {
-        os.path.relpath(urlparse(r["f"]).path, root): r
-        for r in spark.read.schema(schema)
-        .parquet(*[os.path.join(root, p) for p in all_paths])
-        .groupBy(F.col("_metadata.file_path").alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(fixed("p")).alias("s"))
-        .collect()
-    }
+    all_paths = {a["path"] for st in states.values() for a in st["adds"]}
+    per_file = _file_sums(spark, root, all_paths, schema, fixed("p"))
     rows = []
     for ver, st in sorted(states.items()):
         members = [per_file[a["path"]] for a in st["adds"]]
         rows.append(
             (
                 ver,
-                sum(m["n"] for m in members),
-                sum(m["s"] for m in members) / float(SCALE),
+                sum(n for n, _ in members),
+                sum(s for _, s in members) / float(SCALE),
             )
         )
     out_schema = StructType([
@@ -1825,8 +1700,6 @@ def scan_delta_column_mapping(spark, sf_dir):
     protocol advertises reader v2/v3."""
     import tempfile
 
-    import pyarrow.parquet as pq
-
     from ..tables import Tables
     from .acid import _detach_and_cleanup
 
@@ -1843,7 +1716,7 @@ def scan_delta_column_mapping(spark, sf_dir):
     assert st0["protocol"]["minReaderVersion"] == 2
     a_path = os.path.join(root, st0["adds"][0]["path"])
     assert all(
-        n.startswith("col-") for n in pq.read_schema(a_path).names
+        n.startswith("col-") for n in read_footer(a_path).schema.names
     ), "data files must store physical names"
     v, n = tbl.delete_rows_dv("p > 180000")
     assert v == (1 if n else 0), (v, n)

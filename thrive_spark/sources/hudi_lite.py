@@ -76,6 +76,7 @@ from pyspark.sql import functions as F
 
 from ..operators._util import dsum, osum
 from ..registry import query
+from .fileset import footer_stats, read_footer
 
 META_COLS = ["_hoodie_commit_time", "_hoodie_record_key"]
 
@@ -707,9 +708,8 @@ class HudiLiteTable:
 
         rows = []
         for s in self.plan_slices():
-            md = pq.ParquetFile(
-                os.path.join(self.root, s["base_path"])
-            ).metadata
+            md = read_footer(os.path.join(self.root, s["base_path"]))
+            stats = footer_stats(md)
             names = {md.schema.column(i).name: i
                      for i in range(md.num_columns)}
             for col in cols:
@@ -722,28 +722,19 @@ class HudiLiteTable:
                         "scope: parquet string bounds may be "
                         "truncated and must not drive pruning"
                     )
-                mn = mx = None
-                nulls = 0
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(names[col]).statistics
-                    if st is None or not st.has_min_max:
-                        mn = mx = None
-                        break
-                    mn = st.min if mn is None else min(mn, st.min)
-                    mx = st.max if mx is None else max(mx, st.max)
-                    nulls += st.null_count or 0
-                if mn is None:
+                st = stats.get(col)
+                if st is None:
                     continue  # no stats: the file stays unprunable
                 is_int = phys in ("INT32", "INT64")
                 rows.append((
                     s["partition"],
                     s["base_path"].rpartition("/")[2],
                     col,
-                    int(mn) if is_int else None,
-                    int(mx) if is_int else None,
-                    None if is_int else float(mn),
-                    None if is_int else float(mx),
-                    int(nulls),
+                    int(st.min) if is_int else None,
+                    int(st.max) if is_int else None,
+                    None if is_int else float(st.min),
+                    None if is_int else float(st.max),
+                    int(st.null_count),
                     bool(s["logs"]),
                 ))
         done = self._all_actions()

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import struct
 import uuid
 
@@ -56,6 +57,16 @@ from pyspark.sql import functions as F
 from ..operators._util import dsum, osum
 from ..registry import query
 from .avro_lite import read_container, write_container
+from .fileset import (
+    POS,
+    drop_positions,
+    file_uri,
+    footer_stats,
+    per_file_partials,
+    position_keys,
+    positions,
+    write_files,
+)
 
 _ICE_TO_SPARK = {
     "long": "bigint",
@@ -233,6 +244,17 @@ def _deser_bound(b: bytes, ice_type: str):
     if ice_type == "string":
         return b.decode()
     raise NotImplementedError(f"bound deserialization for {ice_type}")
+
+
+def _hive_value(raw: str | None, ice_type: str):
+    """A partition value read back from its hive directory name."""
+    if raw is None or ice_type == "string":
+        return raw
+    if ice_type in ("long", "int"):
+        return int(raw)
+    if ice_type == "double":
+        return float(raw)
+    raise NotImplementedError(f"{ice_type} partition values")
 
 
 # ---------- partition transforms (spec §Partition Transforms) ----------
@@ -699,71 +721,20 @@ class IcebergLiteTable:
         # after partition EVOLUTION files from different specs may
         # differ in which identity columns were dropped to metadata —
         # group by (spec, identity tuple), read each group under its
-        # own data schema, re-materialize identity literals, and
-        # union back to the one logical schema
-        id_names_by_spec = {
-            s["spec-id"]: [
-                f["name"]
-                for f in self._spec_fields(md, s["spec-id"])
-                if f["transform"] == "identity"
-            ]
-            for s in md["partition-specs"]
-        }
-        col_types = dict(spark_fields)
-
-        def read_group(fs, part_names, pv):
-            data_ddl = ", ".join(
-                f"{n} {t}" for n, t in spark_fields
-                if n not in part_names
-            )
-            df = self.spark.read.schema(data_ddl).parquet(
-                *sorted(os.path.join(self.root, f["file_path"])
-                        for f in fs)
-            )
-            # identity literals attach BEFORE delete application so
-            # equality deletes can match on partition columns too
-            # (_metadata stays resolvable through withColumn)
-            for c, val in zip(part_names, pv):
-                df = df.withColumn(c, F.lit(val).cast(col_types[c]))
-            df = self._apply_deletes(df, deletes, file_seq)
-            return df.select(*[n for n, _ in spark_fields])
-
-        by_group: dict[tuple, list] = {}
-        for f in files:
-            sp = f.get("_spec_id", md["default-spec-id"])
-            pv = tuple(
-                f["partition"].get(c) for c in id_names_by_spec[sp]
-            )
-            by_group.setdefault((sp, pv), []).append(f)
+        # own data schema, re-materialize identity literals (BEFORE
+        # delete application, so equality deletes can match on
+        # partition columns too), and union back to the one logical
+        # schema
         out = None
-        for (sp, pv), fs in sorted(
-            by_group.items(),
+        for (sp, _pv), fs in sorted(
+            self._group_by_spec_identity(files, md).items(),
             key=lambda kv: (kv[0][0], tuple(map(str, kv[0][1]))),
         ):
-            df = read_group(fs, id_names_by_spec[sp], pv)
+            df = self._read_group_with_identity(fs, sp, md)
+            if deletes:
+                df = positions(df)
             out = df if out is None else out.unionByName(df)
-        return out
-
-    def _apply_pos_deletes(self, df, deletes: list[dict]):
-        """v2 merge-on-read: drop rows position delete files mark —
-        a distributed anti-join on (_metadata.file_path,
-        _metadata.row_index), the same shape as Delta deletion
-        vectors. Delete files are plain parquet (file_path, pos), so
-        the delete side is itself a pruned columnar scan; it
-        broadcasts here because deletes are the small side by
-        construction."""
-        if not any(d.get("content", 1) == 1 for d in deletes):
-            return df
-        df = df.select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-        return df.join(
-            F.broadcast(self._delete_keys_df(deletes)),
-            ["__fp", "__ri"],
-            "left_anti",
-        ).drop("__fp", "__ri")
+        return self._drop_deleted(out, deletes, file_seq)
 
     def _delete_keys_df(self, deletes: list[dict]):
         """(__fp, __ri) keys of every position-deleted row, with
@@ -782,10 +753,8 @@ class IcebergLiteTable:
         dvs = [d for d in pos if d.get("referenced_data_file")]
         pq_files = [d for d in pos if not d.get("referenced_data_file")]
         if not pos:
-            return self.spark.createDataFrame(
-                [], "__fp string, __ri bigint"
-            )
-        prefix = "file:" + os.path.abspath(self.root) + "/"
+            return position_keys(self.spark, [])
+        prefix = file_uri(self.root) + "/"
         out = None
         if dvs:
             from .puffin_lite import dv_blob_decode, read_puffin_blob
@@ -805,9 +774,7 @@ class IcebergLiteTable:
                     int(d["content_size_in_bytes"]),
                 )
                 rows += [(prefix + r, p) for p in dv_blob_decode(seg)]
-            out = self.spark.createDataFrame(
-                rows, "__fp string, __ri bigint"
-            )
+            out = position_keys(self.spark, rows)
         if pq_files:
             del_df = self.spark.read.schema(
                 "file_path string, pos bigint"
@@ -828,28 +795,32 @@ class IcebergLiteTable:
             out = pq_keys if out is None else out.unionByName(pq_keys)
         return out
 
-    def _apply_eq_deletes(self, df, deletes: list[dict], file_seq: dict):
-        """v2 EQUALITY deletes, sequence-aware (spec §Scan Planning):
+    def _drop_deleted(self, df, deletes: list[dict], file_seq: dict):
+        """Live rows of ``df``, a data-file scan carrying
+        ``positions``, with the helper columns dropped. POSITION
+        deletes (and v3 DVs) drop rows by the row-index anti-join.
+        v2 EQUALITY deletes are sequence-aware (spec §Scan Planning):
         a delete file with data sequence number s drops a row only
         when the row's data file has a STRICTLY lower sequence number
         — which is exactly what lets `DELETE keys; INSERT keys` leave
         the re-inserted rows alive without reading any data at write
         time. Matching is null-safe equality over the delete file's
-        equality_ids columns (spec: IS NOT DISTINCT FROM). ``df``
-        must carry __fp (the _metadata.file_path URI); the
+        equality_ids columns (spec: IS NOT DISTINCT FROM). The
         metadata-sized file→sequence map and the delete values both
         broadcast, the drop is a null-safe anti-join — scan
         parallelism untouched."""
+        if any(d.get("content", 1) == 1 for d in deletes):
+            df = drop_positions(df, self._delete_keys_df(deletes))
         eqs = [d for d in deletes if d.get("content") == 2]
         if not eqs:
-            return df
+            return df.drop(*POS)
         md = self.metadata()
         id2name = {f["id"]: f["name"] for f in md["schema"]["fields"]}
         sp_type = {
             f["name"]: _ICE_TO_SPARK[f["type"]]
             for f in md["schema"]["fields"]
         }
-        prefix = "file:" + os.path.abspath(self.root) + "/"
+        prefix = file_uri(self.root) + "/"
         seq_df = self.spark.createDataFrame(
             [(prefix + p, int(s)) for p, s in sorted(file_seq.items())],
             "__fp string, __seq bigint",
@@ -885,218 +856,25 @@ class IcebergLiteTable:
             for c in cols:
                 cond = cond & df[c].eqNullSafe(dd[c])
             df = df.join(F.broadcast(dd), on=cond, how="left_anti")
-        return df.drop("__seq")
-
-    def _apply_deletes(self, df, deletes: list[dict], file_seq: dict):
-        """Apply both v2 delete kinds to a frame that still has its
-        _metadata identity; returns the live rows with helper columns
-        dropped."""
-        pos = [d for d in deletes if d.get("content", 1) == 1]
-        eqs = [d for d in deletes if d.get("content") == 2]
-        if not (pos or eqs):
-            return df
-        df = df.select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-        if pos:
-            df = df.join(
-                F.broadcast(self._delete_keys_df(pos)),
-                ["__fp", "__ri"],
-                "left_anti",
-            )
-        if eqs:
-            df = self._apply_eq_deletes(df, eqs, file_seq)
-        return df.drop("__fp", "__ri")
+        return df.drop("__seq", *POS)
 
     # ---------- minimal spec writer (exhibit/test construction) ----------
 
-    def _write_data_files(
+    def _write(
         self,
         df,
         part_fields: list[dict],
         schema_fields: list[dict] | None = None,
     ) -> list[dict]:
-        """Write df as parquet data files; returns data_file records
-        (record_count/file_size AND per-column lower/upper bounds from
-        the parquet footers via pyarrow — no extra Spark job; stats are
-        limited to long/double columns because parquet string stats may
-        be truncated, and a truncated bound used for pruning would drop
-        matching files)."""
-        import pyarrow.parquet as pq
-
-        if any(f["transform"] != "identity" for f in part_fields):
-            return self._write_data_files_hive(
-                df, part_fields, schema_fields
-            )
-        part_names = [f["name"] for f in part_fields]
-        sub = f"data/{uuid.uuid4().hex[:8]}"
-        out_root = os.path.join(self.root, sub)
-        recs: list[dict] = []
-        if part_names:
-            pvs = [
-                tuple(x) for x in
-                df.select(*part_names).distinct().collect()
-            ]
-            if all(
-                isinstance(v, (str, int)) and v != ""
-                and not isinstance(v, bool)
-                for pv in pvs for v in pv
-            ):
-                # r16: ONE partitionBy job (the r14 "one job + walk
-                # the hive dirs" rule, previously only on transformed
-                # specs) — the per-group loop below rescans the input
-                # once per partition
-                return self._write_identity_partitioned(
-                    df, part_names, pvs, sub, schema_fields
-                )
-            # fallback for exotic partition-value domains (None,
-            # empty string, non-str/int types): hive dir names can't
-            # round-trip them exactly, the bounded per-group loop can
-            groups = [
-                (pv, df.filter(
-                    " AND ".join(
-                        f"{c} = {v!r}" if isinstance(v, str) else f"{c} = {v}"
-                        for c, v in zip(part_names, pv)
-                    )
-                ).drop(*part_names))
-                for pv in pvs
-            ]
-        else:
-            groups = [((), df)]
-        for pv, sdf in groups:
-            tag = "-".join(str(v) for v in pv) or "all"
-            out = os.path.join(out_root, f"pv-{tag}")
-            sdf.write.parquet(out)
-            for fname in sorted(os.listdir(out)):
-                if not fname.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(out, fname)
-                meta = pq.ParquetFile(fpath).metadata
-                lower, upper = self._footer_bounds(meta, schema_fields)
-                recs.append({
-                    "file_path": f"{sub}/pv-{tag}/{fname}",
-                    "file_format": "PARQUET",
-                    "partition": dict(zip(part_names, pv)),
-                    "record_count": meta.num_rows,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "block_size_in_bytes": 67108864,
-                    "lower_bounds": lower or None,
-                    "upper_bounds": upper or None,
-                })
-        return recs
-
-    def _write_identity_partitioned(
-        self, df, part_names, pvs, sub, schema_fields
-    ) -> list[dict]:
-        """Identity-spec writer: ONE ``partitionBy`` job, hive dirs
-        walked back into data_file records. Typed partition values are
-        recovered by matching each dir segment to the collected
-        distinct tuples (callers gate to str/int, non-empty domains),
-        so the manifest keeps exact values while the input is scanned
-        once regardless of partition count. Identity partition columns
-        are dropped from the data files (re-materialized from
-        metadata at read), same as the per-group writer."""
-        import urllib.parse
-
-        import pyarrow.parquet as pq
-
-        out_root = os.path.join(self.root, sub)
-        df.write.partitionBy(*part_names).parquet(out_root)
-        by_str = {tuple(str(v) for v in pv): pv for pv in pvs}
-        recs: list[dict] = []
-        for dirpath, _dirs, fnames in sorted(os.walk(out_root)):
-            parts = [
-                f for f in sorted(fnames) if f.endswith(".parquet")
-            ]
-            if not parts:
-                continue
-            rel_dir = os.path.relpath(dirpath, out_root)
-            svals = tuple(
-                urllib.parse.unquote(s.split("=", 1)[1])
-                for s in rel_dir.split(os.sep)
-            )
-            pv = by_str[svals]
-            for fname in parts:
-                fpath = os.path.join(dirpath, fname)
-                meta = pq.ParquetFile(fpath).metadata
-                lower, upper = self._footer_bounds(meta, schema_fields)
-                recs.append({
-                    "file_path": "/".join(
-                        [sub, *rel_dir.split(os.sep), fname]
-                    ),
-                    "file_format": "PARQUET",
-                    "partition": dict(zip(part_names, pv)),
-                    "record_count": meta.num_rows,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "block_size_in_bytes": 67108864,
-                    "lower_bounds": lower or None,
-                    "upper_bounds": upper or None,
-                })
-        return recs
-
-    @staticmethod
-    def _footer_bounds(
-        meta, schema_fields: list[dict] | None
-    ) -> tuple[list, list]:
-        """Per-column lower/upper bounds from an open parquet footer
-        (long/double only — parquet string stats may be truncated, and
-        a truncated bound used for pruning would drop matching files)."""
-        lower, upper = [], []
-        if not schema_fields or not meta.num_rows:
-            return lower, upper
-        by_name = {
-            f["name"]: f for f in schema_fields
-            if f["type"] in ("long", "double")
-        }
-        rg0 = meta.row_group(0)
-        col_idx = {
-            rg0.column(i).path_in_schema: i
-            for i in range(rg0.num_columns)
-        }
-        for name, f in by_name.items():
-            if name not in col_idx:
-                continue
-            mins, maxs = [], []
-            for g in range(meta.num_row_groups):
-                st = meta.row_group(g).column(col_idx[name]).statistics
-                if st is None or not st.has_min_max:
-                    mins = []
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if mins:
-                lower.append({
-                    "key": f["id"],
-                    "value": _ser_bound(min(mins), f["type"]),
-                })
-                upper.append({
-                    "key": f["id"],
-                    "value": _ser_bound(max(maxs), f["type"]),
-                })
-        return lower, upper
-
-    def _write_data_files_hive(
-        self,
-        df,
-        part_fields: list[dict],
-        schema_fields: list[dict] | None = None,
-    ) -> list[dict]:
-        """Writer path for specs with NON-IDENTITY transforms: derive
-        every partition value as a Spark column (bucket/truncate/
-        temporal — _transform_spark_col) and write the whole frame in
-        ONE partitionBy job, then walk the hive layout back into
-        data_file records. One distributed pass regardless of
-        partition count — the per-group filter loop of the identity
-        path would rescan the input once per partition. Identity
-        sources leave the data files (they re-materialize from
-        metadata); transformed sources STAY in the data (the derived
-        ordinal is metadata-only — hidden partitioning)."""
-        import urllib.parse
-
-        import pyarrow.parquet as pq
-
+        """Write df as parquet data files under the spec
+        ``part_fields``; returns data_file records with record_count
+        and column bounds from the footers (no extra Spark job). ONE
+        partitionBy job whatever the partition count: transformed
+        values derive as Spark columns (_transform_spark_col) and stay
+        metadata-only — hidden partitioning keeps their sources in the
+        data — while identity sources leave the data files (they
+        re-materialize from metadata at read). The hive walk parses
+        each value by its field's type."""
         names = [f["name"] for f in part_fields]
         d2 = df
         for pf in part_fields:
@@ -1114,43 +892,67 @@ class IcebergLiteTable:
                 ),
             )
         sub = f"data/{uuid.uuid4().hex[:8]}"
-        out_root = os.path.join(self.root, sub)
-        d2.write.partitionBy(*names).parquet(out_root)
-
-        def parse_pv(seg: str, pf: dict):
-            raw = urllib.parse.unquote(seg.split("=", 1)[1])
-            if raw == "__HIVE_DEFAULT_PARTITION__":
-                return None
-            return raw if pf["_result_type"] == "string" else int(raw)
-
+        out = os.path.join(self.root, sub)
+        entries = write_files(d2, out, names)
+        if not any(
+            e.partition[pf["name"]] is None
+            for e in entries for pf in part_fields
+            if pf["_result_type"] == "string"
+        ):
+            return [
+                self._data_file(sub, e, {
+                    pf["name"]: _hive_value(
+                        e.partition[pf["name"]], pf["_result_type"]
+                    )
+                    for pf in part_fields
+                }, schema_fields)
+                for e in entries
+            ]
+        # a NULL and an empty string share __HIVE_DEFAULT_PARTITION__:
+        # rewrite with one write per exact partition tuple instead
+        shutil.rmtree(out)
         recs: list[dict] = []
-        for dirpath, _dirs, fnames in sorted(os.walk(out_root)):
-            parts = [f for f in sorted(fnames) if f.endswith(".parquet")]
-            if not parts:
-                continue
-            rel_dir = os.path.relpath(dirpath, out_root)
-            segs = [] if rel_dir == "." else rel_dir.split(os.sep)
-            pv = {
-                pf["name"]: parse_pv(seg, pf)
-                for seg, pf in zip(segs, part_fields)
-            }
-            for fname in parts:
-                fpath = os.path.join(dirpath, fname)
-                meta = pq.ParquetFile(fpath).metadata
-                lower, upper = self._footer_bounds(meta, schema_fields)
-                recs.append({
-                    "file_path": os.path.join(
-                        sub, os.path.relpath(fpath, out_root)
-                    ),
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": meta.num_rows,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "block_size_in_bytes": 67108864,
-                    "lower_bounds": lower or None,
-                    "upper_bounds": upper or None,
-                })
+        for i, pv in enumerate(d2.select(*names).distinct().collect()):
+            cond = F.lit(True)
+            for c, v in zip(names, pv):
+                cond = cond & F.col(c).eqNullSafe(F.lit(v))
+            recs += [
+                self._data_file(
+                    f"{sub}/pv-{i}", e, dict(zip(names, pv)), schema_fields
+                )
+                for e in write_files(
+                    d2.filter(cond).drop(*names), f"{out}/pv-{i}"
+                )
+            ]
         return recs
+
+    @staticmethod
+    def _data_file(sub: str, e, partition: dict, schema_fields) -> dict:
+        """The data_file record of a written file. Bounds cover
+        long/double columns only: parquet may truncate string
+        statistics, and a truncated bound used for pruning would drop
+        matching files."""
+        stats = footer_stats(e.footer)
+        lower, upper = [], []
+        for f in schema_fields or []:
+            st = stats.get(f["name"])
+            if st is not None and f["type"] in ("long", "double"):
+                lower.append({
+                    "key": f["id"], "value": _ser_bound(st.min, f["type"])
+                })
+                upper.append({
+                    "key": f["id"], "value": _ser_bound(st.max, f["type"])
+                })
+        return {
+            "file_path": f"{sub}/{e.relpath}",
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": e.num_rows,
+            "file_size_in_bytes": e.size,
+            "block_size_in_bytes": 67108864,
+            "lower_bounds": lower or None,
+            "upper_bounds": upper or None,
+        }
 
     def _write_manifest(
         self,
@@ -1414,7 +1216,7 @@ class IcebergLiteTable:
             "metadata-log": [],
         }
         sid = 1
-        adds = self._write_data_files(df, spec_fields, schema["fields"])
+        adds = self._write(df, spec_fields, schema["fields"])
         entries = [
             {"status": 1, "snapshot_id": sid, "data_file": a}
             for a in adds
@@ -1521,7 +1323,7 @@ class IcebergLiteTable:
         prior, _, _ = read_container(
             os.path.join(self.root, cur["manifest-list"])
         )
-        adds = self._write_data_files(df, part_fields, md["schema"]["fields"])
+        adds = self._write(df, part_fields, md["schema"]["fields"])
         entries = [
             {"status": 1, "snapshot_id": sid, "data_file": a}
             for a in adds
@@ -1800,7 +1602,7 @@ class IcebergLiteTable:
         Delete Files") tracked by a DELETE MANIFEST (content=1) in the
         new snapshot's manifest list. Zero data-file rewrite; the read
         side applies deletes as a row-index anti-join
-        (_apply_pos_deletes). Positions are computed against the LIVE
+        (_drop_deleted). Positions are computed against the LIVE
         snapshot, so re-deleting already-deleted rows is a no-op and
         repeated deletes accumulate delete files (compaction of those
         is the maintenance job, as in any MoR design). Upgrades the
@@ -1815,31 +1617,18 @@ class IcebergLiteTable:
         on the driver. coalesce(1) is the spec's sort requirement
         (one delete file ordered by file_path, pos), acting on
         delete-payload-sized data, not the table."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
         md = self.metadata()
-        part_fields = self._spec_fields(md)
         files, deletes, _ = self._plan()
         if not files:
             return md["current-snapshot-id"], 0
-        prefix = "file:" + os.path.abspath(self.root) + "/"
+        prefix = file_uri(self.root) + "/"
         # only LIVE rows are victims: capture the row index, then
         # anti-join existing deletes (so re-deleting is a no-op)
-        scan = self.spark.read.parquet(*[
+        scan = positions(self.spark.read.parquet(*[
             os.path.join(self.root, f["file_path"]) for f in files
-        ]).select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
+        ]))
         if deletes:
-            scan = scan.join(
-                F.broadcast(self._delete_keys_df(deletes)),
-                ["__fp", "__ri"],
-                "left_anti",
-            )
+            scan = drop_positions(scan, self._delete_keys_df(deletes))
         victims_df = scan.filter(pred_sql).select(
             F.expr(f"substring(__fp, {len(prefix) + 1})")
             .alias("file_path"),
@@ -1849,43 +1638,55 @@ class IcebergLiteTable:
         tmp = os.path.join(
             self.root, f"data/.tmp-del-{uuid.uuid4().hex[:8]}"
         )
-        (
+        written = write_files(
             victims_df.coalesce(1)
-            .sortWithinPartitions("file_path", "pos")
-            .write.parquet(tmp)
+            .sortWithinPartitions("file_path", "pos"),
+            tmp,
         )
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")
-        )
-        n_victims = pq.ParquetFile(
-            os.path.join(tmp, part)
-        ).metadata.num_rows
-        if n_victims == 0:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return md["current-snapshot-id"], 0
-        os.replace(os.path.join(tmp, part), os.path.join(self.root, rel))
+        if written:  # coalesce(1): one file, or none without victims
+            os.replace(
+                os.path.join(tmp, written[0].relpath),
+                os.path.join(self.root, rel),
+            )
         shutil.rmtree(tmp, ignore_errors=True)
+        if not written:
+            return md["current-snapshot-id"], 0
+        n_victims = written[0].num_rows
         sid = max(s["snapshot-id"] for s in md["snapshots"]) + 1
-        del_rec = {
+        self._commit_deletes(md, sid, [{
             "content": 1,
             "file_path": rel,
             "file_format": "PARQUET",
-            "partition": {f["name"]: None for f in part_fields},
             "record_count": n_victims,
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(self.root, rel)
-            ),
-            "block_size_in_bytes": 67108864,
-            "lower_bounds": None,
-            "upper_bounds": None,
-        }
+            "file_size_in_bytes": written[0].size,
+        }], format_version=2)
+        return sid, n_victims
+
+    def _commit_deletes(
+        self, md: dict, sid: int, del_recs: list[dict], format_version: int
+    ) -> None:
+        """Commit delete files as snapshot ``sid``: ONE delete manifest
+        (content=1) at the next data sequence number, appended to the
+        current snapshot's manifest list; upgrades the table to
+        ``format_version``."""
+        part_fields = self._spec_fields(md)
         seq = md.get("last-sequence-number", 0) + 1
+        recs = [
+            {
+                "partition": {f["name"]: None for f in part_fields},
+                "block_size_in_bytes": 67108864,
+                "lower_bounds": None,
+                "upper_bounds": None,
+                **r,
+            }
+            for r in del_recs
+        ]
         mpath = f"metadata/{uuid.uuid4().hex}-m0.avro"
         write_container(
             os.path.join(self.root, mpath),
             _manifest_entry_schema(part_fields),
             [{"status": 1, "snapshot_id": sid,
-              "sequence_number": seq, "data_file": del_rec}],
+              "sequence_number": seq, "data_file": r} for r in recs],
             metadata={"format-version": b"2", "content": b"deletes"},
         )
         mrow = {
@@ -1895,11 +1696,11 @@ class IcebergLiteTable:
             ),
             "partition_spec_id": 0,
             "added_snapshot_id": sid,
-            "added_data_files_count": 1,
+            "added_data_files_count": len(recs),
             "existing_data_files_count": 0,
             "deleted_data_files_count": 0,
             "partitions": None,
-            "added_rows_count": n_victims,
+            "added_rows_count": sum(r["record_count"] for r in recs),
             "existing_rows_count": 0,
             "deleted_rows_count": 0,
             "content": 1,
@@ -1911,9 +1712,8 @@ class IcebergLiteTable:
         prior, _, _ = read_container(
             os.path.join(self.root, cur["manifest-list"])
         )
-        md["format-version"] = 2
+        md["format-version"] = format_version
         self._commit_snapshot(md, prior + [mrow], sid, seq=seq)
-        return sid, n_victims
 
     def delete_rows_vector(self, pred_sql: str) -> tuple[int, int]:
         """FORMAT-V3 DELETION VECTORS (spec §Position Delete Vectors;
@@ -1939,7 +1739,6 @@ class IcebergLiteTable:
         )
 
         md = self.metadata()
-        part_fields = self._spec_fields(md)
         files, deletes, _ = self._plan()
         # existing deleted positions per data file (DV beats parquet
         # rows per the read rule — decode exactly what a reader sees)
@@ -1982,14 +1781,10 @@ class IcebergLiteTable:
         victims: dict[str, set[int]] = {}
         n_new = 0
         if files:
-            prefix = "file:" + os.path.abspath(self.root) + "/"
-            pairs = self.spark.read.parquet(*[
+            prefix = file_uri(self.root) + "/"
+            pairs = positions(self.spark.read.parquet(*[
                 os.path.join(self.root, f["file_path"]) for f in files
-            ]).select(
-                "*",
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            ).filter(pred_sql).select(
+            ])).filter(pred_sql).select(
                 F.expr(f"substring(__fp, {len(prefix) + 1})")
                 .alias("fp"),
                 "__ri",
@@ -2021,61 +1816,21 @@ class IcebergLiteTable:
                 },
             })
         entries = write_puffin(os.path.join(self.root, rel), blobs)
-        del_recs = []
-        for e in entries:
-            del_recs.append({
+        size = os.path.getsize(os.path.join(self.root, rel))
+        self._commit_deletes(md, sid, [
+            {
                 "content": 1,
                 "file_path": rel,
                 "file_format": "PUFFIN",
-                "partition": {f["name"]: None for f in part_fields},
                 "record_count": int(e["properties"]["cardinality"]),
-                "file_size_in_bytes": os.path.getsize(
-                    os.path.join(self.root, rel)
-                ),
-                "block_size_in_bytes": 67108864,
-                "lower_bounds": None,
-                "upper_bounds": None,
+                "file_size_in_bytes": size,
                 "referenced_data_file":
                     e["properties"]["referenced-data-file"],
                 "content_offset": e["offset"],
                 "content_size_in_bytes": e["length"],
-            })
-        mpath = f"metadata/{uuid.uuid4().hex}-m0.avro"
-        write_container(
-            os.path.join(self.root, mpath),
-            _manifest_entry_schema(part_fields),
-            [{"status": 1, "snapshot_id": sid,
-              "sequence_number": seq, "data_file": r}
-             for r in del_recs],
-            metadata={"format-version": b"2", "content": b"deletes"},
-        )
-        mrow = {
-            "manifest_path": mpath,
-            "manifest_length": os.path.getsize(
-                os.path.join(self.root, mpath)
-            ),
-            "partition_spec_id": 0,
-            "added_snapshot_id": sid,
-            "added_data_files_count": len(del_recs),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "partitions": None,
-            "added_rows_count": sum(
-                r["record_count"] for r in del_recs
-            ),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "content": 1,
-        }
-        cur = next(
-            s for s in md["snapshots"]
-            if s["snapshot-id"] == md["current-snapshot-id"]
-        )
-        prior, _, _ = read_container(
-            os.path.join(self.root, cur["manifest-list"])
-        )
-        md["format-version"] = 3
-        self._commit_snapshot(md, prior + [mrow], sid, seq=seq)
+            }
+            for e in entries
+        ], format_version=3)
         return sid, n_new
 
     def delete_rows_equality(
@@ -2097,7 +1852,6 @@ class IcebergLiteTable:
         import pyarrow.parquet as pq
 
         md = self.metadata()
-        part_fields = self._spec_fields(md)
         by_name = {f["name"]: f for f in md["schema"]["fields"]}
         missing = [c for c in eq_cols if c not in by_name]
         if missing:
@@ -2116,54 +1870,16 @@ class IcebergLiteTable:
         })
         pq.write_table(tbl_pa, os.path.join(self.root, rel))
         sid = max(s["snapshot-id"] for s in md["snapshots"]) + 1
-        seq = md.get("last-sequence-number", 0) + 1
-        del_rec = {
+        self._commit_deletes(md, sid, [{
             "content": 2,
             "file_path": rel,
             "file_format": "PARQUET",
-            "partition": {f["name"]: None for f in part_fields},
             "record_count": len(values),
             "file_size_in_bytes": os.path.getsize(
                 os.path.join(self.root, rel)
             ),
-            "block_size_in_bytes": 67108864,
-            "lower_bounds": None,
-            "upper_bounds": None,
             "equality_ids": [by_name[c]["id"] for c in eq_cols],
-        }
-        mpath = f"metadata/{uuid.uuid4().hex}-m0.avro"
-        write_container(
-            os.path.join(self.root, mpath),
-            _manifest_entry_schema(part_fields),
-            [{"status": 1, "snapshot_id": sid,
-              "sequence_number": seq, "data_file": del_rec}],
-            metadata={"format-version": b"2", "content": b"deletes"},
-        )
-        mrow = {
-            "manifest_path": mpath,
-            "manifest_length": os.path.getsize(
-                os.path.join(self.root, mpath)
-            ),
-            "partition_spec_id": 0,
-            "added_snapshot_id": sid,
-            "added_data_files_count": 1,
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "partitions": None,
-            "added_rows_count": len(values),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "content": 1,
-        }
-        cur = next(
-            s for s in md["snapshots"]
-            if s["snapshot-id"] == md["current-snapshot-id"]
-        )
-        prior, _, _ = read_container(
-            os.path.join(self.root, cur["manifest-list"])
-        )
-        md["format-version"] = 2
-        self._commit_snapshot(md, prior + [mrow], sid, seq=seq)
+        }], format_version=2)
         return sid
 
     def _identity_names(self, md: dict, sp: int) -> list[str]:
@@ -2271,69 +1987,33 @@ class IcebergLiteTable:
         )
         sid = max(s["snapshot-id"] for s in md["snapshots"]) + 1
         by_spec: dict[int, list] = {default_spec: []}
-        n_rewritten = 0
-        spark_fields = [
-            (sf["name"], _ICE_TO_SPARK[sf["type"]])
-            for sf in md["schema"]["fields"]
-        ]
-        types = dict(spark_fields)
+        live = None
+        file_seq = {}
         for f in files:
             sp = f.get("_spec_id", default_spec)
-            if (
+            untouched = (
                 f["file_path"] not in touched
                 and f.get("_seq", 0) >= max_eq_seq
-            ):
-                by_spec.setdefault(sp, []).append(
-                    {"status": 0, "snapshot_id": sid,
-                     "sequence_number": f.get("_seq", 0), "data_file": f}
-                )
-                continue
-            n_rewritten += 1
+            )
             by_spec.setdefault(sp, []).append(
-                {"status": 2, "snapshot_id": sid,
+                {"status": 0 if untouched else 2, "snapshot_id": sid,
                  "sequence_number": f.get("_seq", 0), "data_file": f}
             )
-            # identity literals attach BEFORE delete application (the
-            # snapshot read's rule) so equality deletes can match on
-            # partition columns of the file's own spec
-            id_names = self._identity_names(md, sp)
-            data_ddl = ", ".join(
-                f"{n} {t}" for n, t in spark_fields if n not in id_names
-            )
-            df = self.spark.read.schema(data_ddl).parquet(
-                os.path.join(self.root, f["file_path"])
-            )
-            for c in id_names:
-                df = df.withColumn(
-                    c, F.lit(f["partition"].get(c)).cast(types[c])
-                )
-            live = self._apply_deletes(
-                df, deletes, {f["file_path"]: f.get("_seq", 0)},
-            ).select(*[n for n, _ in spark_fields])
-            if not live.count():
+            if untouched:
                 continue
-            if sp == default_spec and set(id_names) == {
-                pf["name"] for pf in part_fields
-            } and all(
-                pf["transform"] == "identity" for pf in part_fields
-            ):
-                # same-spec identity layout: keep the cheap stamped
-                # write (no repartition-by-value job)
-                pv = f["partition"]
-                news = self._write_data_files(
-                    live.drop(*id_names), [], md["schema"]["fields"]
-                )
-                for a in news:
-                    a["partition"] = dict(pv)
-            else:
-                # old-spec (or transformed) file: rewrite into the
-                # CURRENT default spec — partition values recompute
-                news = self._write_data_files(
-                    live, part_fields, md["schema"]["fields"]
-                )
+            file_seq[f["file_path"]] = f.get("_seq", 0)
+            df = positions(self._read_group_with_identity([f], sp, md))
+            live = df if live is None else live.unionByName(df)
+        if live is not None:
+            # ONE write of every touched file's live rows into the
+            # CURRENT default spec — partition values recompute from
+            # the re-materialized identity literals
             by_spec[default_spec] += [
                 {"status": 1, "snapshot_id": sid, "data_file": a}
-                for a in news
+                for a in self._write(
+                    self._drop_deleted(live, deletes, file_seq),
+                    part_fields, md["schema"]["fields"],
+                )
             ]
         seq = md.get("last-sequence-number", 0) + 1
         mrows = self._spec_manifests(by_spec, md, sid, seq)
@@ -2342,7 +2022,7 @@ class IcebergLiteTable:
             p = os.path.join(self.root, d["file_path"])
             if os.path.exists(p):
                 os.unlink(p)
-        return sid, n_rewritten
+        return sid, len(file_seq)
 
     def rewrite_data_files(self, min_files_per_group: int = 2) -> tuple[int, int]:
         """BIN-PACKING COMPACTION (Iceberg's rewrite_data_files — the
@@ -2398,27 +2078,17 @@ class IcebergLiteTable:
         compacted = set()
         by_spec: dict[int, list] = {default_spec: []}
         n = 0
-        for (sp, pv), fs in sorted(
+        for (sp, _pv), fs in sorted(
             groups.items(),
             key=lambda kv: (kv[0][0], tuple(map(str, kv[0][1]))),
         ):
-            if sp == default_spec:
-                merged = self.spark.read.parquet(*sorted(
-                    os.path.join(self.root, f["file_path"]) for f in fs
-                )).coalesce(1)
-                news = self._write_data_files(
-                    merged, [], md["schema"]["fields"]
-                )
-                for a in news:
-                    a["partition"] = dict(zip(names_by_spec[sp], pv))
-            else:
-                # old-spec group: migrate into the default spec
-                merged = self._read_group_with_identity(
-                    fs, sp, md
-                ).coalesce(1)
-                news = self._write_data_files(
-                    merged, part_fields, md["schema"]["fields"]
-                )
+            # one file per group, written under the default spec: an
+            # old-spec group migrates, a default-spec group recomputes
+            # its own partition tuple
+            news = self._write(
+                self._read_group_with_identity(fs, sp, md).coalesce(1),
+                part_fields, md["schema"]["fields"],
+            )
             by_spec[default_spec] += [
                 {"status": 1, "snapshot_id": sid, "data_file": a}
                 for a in news
@@ -2457,25 +2127,30 @@ class IcebergLiteTable:
         part_fields = self._spec_fields(md)
         sid = max(s["snapshot-id"] for s in md["snapshots"]) + 1
         files, _ = self.plan_files()
-        victims, carried = [], []
-        for f in files:
-            sp = f.get("_spec_id", default_spec)
-            df = self._read_group_with_identity([f], sp, md)
-            if df.filter(pred_sql).limit(1).count():
-                victims.append(f)
-            else:
-                carried.append(f)
+
+        def read(fs):  # the predicate sees each spec's identity columns
+            out = None
+            for (sp, _pv), group in sorted(
+                self._group_by_spec_identity(fs, md).items(),
+                key=lambda kv: (kv[0][0], tuple(map(str, kv[0][1]))),
+            ):
+                df = positions(
+                    self._read_group_with_identity(group, sp, md)
+                )
+                out = df if out is None else out.unionByName(df)
+            return out
+
+        hits = per_file_partials(
+            read(files).filter(pred_sql), self.root
+        ) if files else {}
+        hit = [os.path.normpath(f["file_path"]) in hits for f in files]
+        victims = [f for f, h in zip(files, hit) if h]
+        carried = [f for f, h in zip(files, hit) if not h]
         if not victims:
             return md["current-snapshot-id"]
-        kept = None
-        for (sp, _pv), fs in sorted(
-            self._group_by_spec_identity(victims, md).items(),
-            key=lambda kv: (kv[0][0], tuple(map(str, kv[0][1]))),
-        ):
-            part = self._read_group_with_identity(fs, sp, md).filter(
-                f"NOT coalesce(({pred_sql}), false)"
-            )
-            kept = part if kept is None else kept.unionByName(part)
+        kept = read(victims).filter(
+            f"NOT coalesce(({pred_sql}), false)"
+        ).drop(*POS)
         by_spec: dict[int, list] = {default_spec: []}
         for f in carried:
             by_spec.setdefault(
@@ -2491,13 +2166,12 @@ class IcebergLiteTable:
                 {"status": 2, "snapshot_id": sid,
                  "sequence_number": f.get("_seq", 0), "data_file": f}
             )
-        if kept.count():
-            by_spec[default_spec] += [
-                {"status": 1, "snapshot_id": sid, "data_file": a}
-                for a in self._write_data_files(
-                    kept, part_fields, md["schema"]["fields"]
-                )
-            ]
+        by_spec[default_spec] += [
+            {"status": 1, "snapshot_id": sid, "data_file": a}
+            for a in self._write(
+                kept, part_fields, md["schema"]["fields"]
+            )
+        ]
         seq = md.get("last-sequence-number", 0) + 1
         mrows = self._spec_manifests(by_spec, md, sid, seq)
         self._commit_snapshot(md, mrows, sid, seq=seq)

@@ -146,11 +146,11 @@ class Pipeline:
             writer = df.write
             if mode == "overwrite_partitions":
                 # dynamic partition overwrite: replace only partitions
-                # present in this load — the idempotent re-run story
-                self.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
+                # present in this load — the idempotent re-run story.
+                # A per-write option, so the session conf is untouched
+                writer = writer.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
                 )
-                writer = writer.mode("overwrite")
             else:
                 writer = writer.mode(mode)
             if sink.get("partition_by"):

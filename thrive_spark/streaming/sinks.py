@@ -18,11 +18,10 @@ def idempotent_parquet_sink(out_path: str):
     batch_id (dynamic partition overwrite makes replays no-ops)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(out_path)
         )
